@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import relational
+from .rounds import Rounds
 
 HASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime modulus)
 
@@ -259,47 +260,33 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 25,
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """Connected components over an undirected pair graph by min-label
     propagation: every node's label converges to the smallest node id
     reachable from it (the component representative — dedup keeps that
     doc and drops the rest of the cluster).
 
-    This is genuinely iterative (Pregel-style): each round is one
-    join + aggregate, all distributed; the driver only checks a scalar
-    convergence count per round, so rounds = graph diameter (near-dup
-    clusters are shallow — a handful). Each round's labels are
-    ``localCheckpoint``-ed: iterative plans otherwise nest every prior
-    round's lineage, and the per-round Catalyst analysis cost compounds
-    until planning, not execution, dominates. The checkpoint cuts the
-    plan back to a leaf — O(|nodes|) state, constant-size plans.
-
-    ``broadcast_state`` (optimization round 16 — the ``graph.pagerank``
-    discipline): the label table is NODE-scale while ``sym`` is
-    edge-scale, but both come off checkpointed RDDs whose stats are
-    opaque to the planner, which therefore sort-merge-joins the edge
-    table every round (a full edge shuffle per round). Broadcasting
-    the per-round node state makes each round map-side joins over the
-    stationary checkpointed edges + one node-scale aggregate exchange.
-    Set False only when the node table itself exceeds broadcast limits
-    (~10^8 nodes); results are identical either way (join strategy
-    never changes values)."""
-    _bs = F.broadcast if broadcast_state else (lambda df: df)
-    # the edge list is consulted every round — materialize it once (and
-    # cut the upstream pair-pipeline lineage out of every round's plan);
-    # deferred: round 1's convergence count materializes it inside its
-    # own job instead of paying two eager driver jobs up front
-    sym = (
+    This is genuinely iterative (Pregel-style), on the
+    :class:`rounds.Rounds` driver: each round is one join + aggregate,
+    all distributed, and the driver's convergence probe counts the
+    labels that changed, so rounds = graph diameter (near-dup clusters
+    are shallow — a handful). The NODE-scale label table is broadcast,
+    so a round is map-side joins over the stationary edge list + one
+    node-scale aggregate exchange (optimization round 16: it was a full
+    edge shuffle per round)."""
+    loop = Rounds()
+    # the edge list is consulted every round — materialized once inside
+    # round 1's convergence count, never as an eager job up front
+    sym = loop.stationary(
         edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .localCheckpoint(eager=False)
     )
     nodes = sym.select(F.col("src").alias("id")).distinct()
     labels = nodes.withColumn("label", F.col("id")).localCheckpoint(eager=False)
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         neighbor_min = (
-            sym.join(_bs(labels), sym.dst == labels.id)
+            sym.join(F.broadcast(labels), sym.dst == labels.id)
             .groupBy("src")
             .agg(F.min("label").alias("_nbr"))
         )
@@ -309,9 +296,9 @@ def connected_components(
         parent = labels.select(
             F.col("id").alias("_pid"), F.col("label").alias("_plabel")
         )
-        new_labels = (
-            labels.join(_bs(neighbor_min), labels.id == neighbor_min.src, "left")
-            .join(_bs(parent), labels.label == F.col("_pid"), "left")
+        return (
+            labels.join(F.broadcast(neighbor_min), labels.id == neighbor_min.src, "left")
+            .join(F.broadcast(parent), labels.label == F.col("_pid"), "left")
             .select(
                 "id",
                 F.least(
@@ -320,21 +307,16 @@ def connected_components(
                     F.coalesce(F.col("_plabel"), F.col("label")),
                 ).alias("label"),
             )
-            # deferred: the convergence count below is the round's single
-            # action and materializes this checkpoint as part of its own
-            # job — an eager checkpoint would add a second job per round
-            # of pure fixed overhead
-            .localCheckpoint(eager=False)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(_bs(labels.alias("o")), on="id")
+
+    def changed(new: DataFrame, old: DataFrame) -> DataFrame:
+        return (
+            new.alias("n")
+            .join(F.broadcast(old.alias("o")), on="id")
             .filter(F.col("n.label") != F.col("o.label"))
-            .count()
         )
-        labels = new_labels
-        if changed == 0:
-            break
+
+    labels = loop.run(labels, step, max_iter, probe=changed)
     return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
 
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .rounds import Rounds
+
 #: decimal type for rank*frac terms in [0, 1]: scale 30 places the
 #: cast's rounding digit ~13 orders of magnitude BELOW the double ulp
 #: of any term, so Spark's HALF_UP vs DuckDB's HALF_EVEN can disagree
@@ -29,12 +31,15 @@ from pyspark.sql import functions as F
 PR_TERM_DECIMAL = "decimal(38,30)"
 
 
-def _sized(df: DataFrame, iter_partitions: int | None) -> DataFrame:
-    """Shared iteration-state sizing for the graph walks (see
-    :func:`pagerank`'s ``iter_partitions`` docstring): repartition the
-    node-scale tables when the caller sized them, else keep the
-    session layout."""
-    return df.repartition(iter_partitions) if iter_partitions else df
+#: cap on the parallelism of the NODE-scale iteration state (the walks'
+#: node and degree tables), applied as a ``coalesce`` of their own
+#: aggregate output (no second shuffle). Left at the session's
+#: fact-shuffle partition count, a graph that fits one executor pays
+#: dozens of near-empty tasks per round (measured 5.9s -> 4.6s for
+#: pagerank at sf0.1). EDGE-scale tables keep the session layout: the
+#: rounds' map and aggregate work runs over their partitions, and
+#: sizing them down serialized the rounds onto a handful of cores.
+ITER_PARTITIONS = 4
 
 
 def pagerank(
@@ -44,10 +49,8 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str = "weight",
-    iter_partitions: int | None = None,
     dangling: str = "forbid",
     precision: str = "exact",
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list ``(src, dst,
     weight)`` — ``iterations`` synchronous power-iteration rounds with
@@ -56,14 +59,14 @@ def pagerank(
     Scale shape: the edge table is normalized once (per-source weight
     fractions — one aggregate + one join), and each round is exactly
     one join (ranks ⋈ edges on src) + one aggregate (sum contributions
-    by dst). With a FIXED iteration count there is **no driver-side
-    action at all**: the full computation is one lazy plan the caller's
-    action executes end-to-end, shuffling only rank-table-sized rows
+    by dst). The rounds run on :class:`rounds.Rounds`: with a FIXED
+    iteration count there is **no driver-side action at all** — every
+    round's state is a deferred checkpoint the caller's action
+    materializes, and each round shuffles only rank-table-sized rows
     (N per round, never the fact table — edges are built by the caller
-    from whatever fact aggregation defines the graph). For high
-    iteration counts insert ``localCheckpoint(eager=False)`` between
-    rounds like ``dedup.connected_components`` — at 5 rounds the plan
-    is shallow enough that truncation would cost more than it saves.
+    from whatever fact aggregation defines the graph). The per-round
+    rank table is broadcast into the join with the stationary edge
+    table; a node table past Spark's broadcast limit fails the query.
 
     Nodes with no in-edges get the pure teleport mass (left join +
     coalesce). ``dangling`` controls nodes with no OUT-edges, whose
@@ -104,15 +107,11 @@ def pagerank(
     per-contribution; agreement with exact mode is ~1e-12 relative,
     pytest-pinned, because the damped iteration is a contraction).
 
-    ``iter_partitions``: iteration-state parallelism. The rank/edge
-    tables are NODE-scale, but without an explicit repartition every
-    round inherits the session's fact-shuffle partition count — for a
-    small graph that is dozens of near-empty tasks per round whose
-    scheduling overhead dominates (checkpointed rounds sit outside
-    AQE's coalescing reach; measured 5.9s → 4.6s at sf0.1 from this
-    knob alone, results bit-identical). Size it to the node count —
-    a handful for graphs that fit one executor, ~nodes/5e6 on a
-    cluster; ``None`` keeps the session default."""
+    The node-scale tables run at :data:`ITER_PARTITIONS`."""
+    if dangling not in ("forbid", "redistribute", "ignore"):
+        raise ValueError(f"dangling must be forbid|redistribute|ignore, got {dangling!r}")
+    if precision not in ("exact", "fast"):
+        raise ValueError(f"precision must be exact|fast, got {precision!r}")
     # ONE exploded aggregation yields the node set, the per-source
     # out-weight totals, AND the dangling set (optimization round 15:
     # the separate union-distinct + groupBy + anti-join paid two
@@ -127,40 +126,32 @@ def pagerank(
     # total stays NULL, so the downstream fractions degrade to NULL
     # precisely as the old per-source sum did).
     w_t = edges.schema[weight].dataType.simpleString()
-    deg = (
-        _sized(
-            edges.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col(src).alias("node"),
-                            F.col(weight).alias("_w"),
-                            F.lit(1).alias("_s"),
-                        ),
-                        F.struct(
-                            F.col(dst).alias("node"),
-                            F.lit(None).cast(w_t).alias("_w"),
-                            F.lit(None).cast("int").alias("_s"),
-                        ),
-                    )
-                ).alias("_x")
-            )
-            .select(
-                F.col("_x.node").alias("node"),
-                F.col("_x._w").alias("_w"),
-                F.col("_x._s").alias("_s"),
-            )
-            .groupBy("node")
-            .agg(F.sum("_w").alias("_out"), F.count("_s").alias("_ns")),
-            iter_partitions,
+    loop = Rounds()
+    deg = loop.stationary(
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col(src).alias("node"),
+                        F.col(weight).alias("_w"),
+                        F.lit(1).alias("_s"),
+                    ),
+                    F.struct(
+                        F.col(dst).alias("node"),
+                        F.lit(None).cast(w_t).alias("_w"),
+                        F.lit(None).cast("int").alias("_s"),
+                    ),
+                )
+            ).alias("_x")
         )
-        # every round references nodes and the normalized edges; left
-        # lazy, round i's plan embeds i copies of the (possibly
-        # fact-scale) edge derivation and Spark re-executes it per
-        # round — measured 9s instead of ~2.5s at sf0.1. The DEFERRED
-        # checkpoint materializes each exactly once inside the caller's
-        # single action, adding no driver-side jobs.
-        .localCheckpoint(eager=False)
+        .select(
+            F.col("_x.node").alias("node"),
+            F.col("_x._w").alias("_w"),
+            F.col("_x._s").alias("_s"),
+        )
+        .groupBy("node")
+        .agg(F.sum("_w").alias("_out"), F.count("_s").alias("_ns"))
+        .coalesce(ITER_PARTITIONS)
     )
     nodes = deg.select("node")
     # scalar N kept INSIDE the plan (1-row frame, broadcast) — no
@@ -168,19 +159,17 @@ def pagerank(
     # the per-round broadcast re-reads ONE row instead of re-running
     # the count aggregate inside every round's query execution
     # (optimization round 15).
-    ncnt = nodes.agg(F.count(F.lit(1)).alias("_n")).localCheckpoint(eager=False)
+    ncnt = loop.stationary(nodes.agg(F.count(F.lit(1)).alias("_n")))
     out_tot = deg.filter(F.col("_ns") > 0).select(
         F.col("node").alias(src), "_out"
     )
-    # the EDGE table keeps its natural partitioning (optimization
-    # round 15): ``iter_partitions`` right-sizes the NODE-scale
-    # iteration state, but with the per-round state broadcast the
-    # rounds' map work (join + decimal contribution terms) runs over
-    # ``e``'s partitions — repartitioning the edge table down to the
-    # node-state parallelism serialized the decimal aggregation onto a
-    # handful of tasks (measured at sf0.1: the 1.17M-row purchase
-    # graph's rounds ran on 4 of 32 cores).
-    e = (
+    # NOT keyed on _edst (optimization round 16 measured the cached,
+    # co-partitioned alternative and REJECTED it): the contribution
+    # aggregate's exchange carries NODE-scale partial sums (sum()
+    # combines map-side), so it is cheap, while the cache's encode +
+    # per-round decode of the EDGE-scale table measured net slower at
+    # sf0.1 (3 fixed-order A/B pairs: ~14.8s vs ~13.8s per query run)
+    e = loop.stationary(
         edges.join(out_tot, on=src).select(
             F.col(src).alias("_esrc"),
             F.col(dst).alias("_edst"),
@@ -188,23 +177,7 @@ def pagerank(
                 "_frac"
             ),
         )
-        # checkpoint, NOT a co-partitioned cache (optimization round
-        # 16 measured the alternative and REJECTED it): hash-
-        # partitioning by _edst and caching would let every round's
-        # contribution aggregate skip its exchange, but that exchange
-        # carries NODE-scale partial sums (sum() combines map-side), so
-        # it is cheap — while the cache's columnar encode + per-round
-        # decode of the EDGE-scale table measured net slower at sf0.1
-        # (3 fixed-order A/B pairs: ~14.8s vs ~13.8s per query run).
-        # core_numbers is the walk where the co-partitioned cache DOES
-        # pay: its collect_list partials are edge-scale (no map-side
-        # reduction), see there.
-        .localCheckpoint(eager=False)
     )
-    if dangling not in ("forbid", "redistribute", "ignore"):
-        raise ValueError(f"dangling must be forbid|redistribute|ignore, got {dangling!r}")
-    if precision not in ("exact", "fast"):
-        raise ValueError(f"precision must be exact|fast, got {precision!r}")
     # 'exact': decimal-cast contributions — bit-replayable cross-engine,
     # what every oracle-checked query uses. 'fast': plain double sums —
     # the production knob (~15% per call measured at sf0.1, more as
@@ -273,20 +246,12 @@ def pagerank(
                 )
             ).alias("rank"),
         )
-    # ``broadcast_state`` (optimization round 15): the per-round state
-    # tables (rank, contributions) are NODE-scale while ``e`` is
-    # EDGE-scale, but both sides come off checkpointed RDDs whose
-    # stats are opaque to the planner — measured at sf0.1, every round
-    # sort-merge-joined the 1.17M-row edge table (a full edge shuffle
-    # PER ROUND). The explicit broadcast makes each round one map-side
-    # join over the stationary checkpointed edges + one node-scale
-    # aggregate exchange. Set False only when the node table itself
-    # exceeds broadcast limits (~10^8 nodes); the rounds then revert
-    # to shuffling node-scale rows against the edge partitioning.
-    _bs = F.broadcast if broadcast_state else (lambda df: df)
-    for _ in range(iterations):
+    # one map-side join + one node-scale aggregate exchange per round
+    # (optimization round 15: without the state broadcast, every round
+    # sort-merge-joined the 1.17M-row sf0.1 edge table)
+    def step(rank: DataFrame) -> DataFrame:
         contrib = (
-            e.join(_bs(rank), e._esrc == rank.node)
+            e.join(F.broadcast(rank), e._esrc == rank.node)
             .select(
                 F.col("_edst").alias("node"),
                 (F.col("rank") * F.col("_frac")).cast(term_t).alias("_term"),
@@ -295,7 +260,7 @@ def pagerank(
             .agg(F.sum("_term").alias("_mass"))
         )
         updated = (
-            nodes.join(_bs(contrib), on="node", how="left")
+            nodes.join(F.broadcast(contrib), on="node", how="left")
             .crossJoin(F.broadcast(ncnt))
         )
         damped_mass = F.lit(damping) * F.coalesce(
@@ -317,20 +282,14 @@ def pagerank(
             damped_mass = damped_mass + F.lit(damping) * (
                 F.col("_dmass").cast("double") / F.col("_n").cast("double")
             )
-        rank = (
-            updated.select(
-                "node",
-                (
-                    F.lit(1.0 - damping) / F.col("_n").cast("double") + damped_mass
-                ).alias("rank"),
-            )
-            # deferred per-round truncation: each round compiles its own
-            # shallow plan instead of one 5-round-deep query (measured
-            # ~3s faster on the first call at sf0.1 — the deep plan's
-            # compile/AQE cost dominates cold); still zero driver jobs
-            .localCheckpoint(eager=False)
+        return updated.select(
+            "node",
+            (
+                F.lit(1.0 - damping) / F.col("_n").cast("double") + damped_mass
+            ).alias("rank"),
         )
-    return rank
+
+    return loop.run(rank, step, iterations)
 
 
 def label_propagation(
@@ -339,8 +298,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     weight: str = "weight",
-    iter_partitions: int | None = None,
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """Synchronous weighted label propagation (community detection):
     every node starts labeled with its own id; each round, a node
@@ -352,64 +309,47 @@ def label_propagation(
     exactly (the oracle unrolls them as CTEs).
 
     Scale shape: each round is one join (labels ⋈ edges on src — the
-    label table is node-scale), one (dst, label) aggregate, and one
-    per-node window (partitioned — never global). Per-round state is
-    deferred-checkpointed, so a fixed iteration count still executes
-    as one caller-triggered action with no driver-side jobs (same
-    discipline as :func:`pagerank`, which also documents why the
-    edge/node tables must be checkpointed rather than re-derived per
-    round, and whose ``iter_partitions`` note explains sizing the
-    node-scale iteration parallelism)."""
-    nodes = (
-        _sized(
-            edges.select(F.col(src).alias("node"))
-            .unionByName(edges.select(F.col(dst).alias("node")))
-            .distinct(),
-            iter_partitions,
-        )
-        .localCheckpoint(eager=False)
+    label table is node-scale and broadcast), one (dst, label)
+    aggregate, and one per-node window (partitioned — never global).
+    The rounds run on :class:`rounds.Rounds`; the edge table is its
+    cached stationary table, so the final round's checkpoint is eager
+    (the call runs every round before returning) and the cache is
+    freed."""
+    loop = Rounds()
+    nodes = loop.stationary(
+        edges.select(F.col(src).alias("node"))
+        .unionByName(edges.select(F.col(dst).alias("node")))
+        .distinct()
+        .coalesce(ITER_PARTITIONS)
     )
-    # hash-partitioned by the round key and CACHED, not checkpointed
-    # (optimization round 16, guide §2.4 — two operations keyed the
-    # same way share one exchange): the per-round (dst, label)
-    # aggregate AND the argmax window both cluster on _edst, and
-    # InMemoryRelation preserves outputPartitioning where a
-    # localCheckpoint degrades to UnknownPartitioning, so this ONE
-    # up-front exchange removes BOTH per-round exchanges (the
-    # aggregate's carries near-edge-scale (dst, label) partials — no
-    # map-side reduction to node scale, unlike pagerank's sum).
-    # Deliberately NOT sized by ``iter_partitions``: the edge table is
-    # EDGE-scale and every round's map + aggregate + window work runs
-    # over its partitions — caching it at the node-state parallelism
-    # measured 5.5s -> 8s at sf0.1 (rounds serialized onto 4/32
-    # cores, the r15 pagerank lesson); the session/AQE sizing keeps
-    # the round work wide.
-    e = edges.select(
-        F.col(src).alias("_esrc"),
-        F.col(dst).alias("_edst"),
-        F.col(weight).alias("_w"),
-    ).repartition(F.col("_edst")).cache()
-    labels = nodes.withColumn("label", F.col("node"))
+    # keyed on _edst (optimization round 16): the per-round (dst,
+    # label) aggregate AND the argmax window both cluster on it, so one
+    # up-front exchange removes both per-round exchanges (the
+    # aggregate's carries near-edge-scale partials, unlike pagerank's)
+    e = loop.stationary(
+        edges.select(
+            F.col(src).alias("_esrc"),
+            F.col(dst).alias("_edst"),
+            F.col(weight).alias("_w"),
+        ),
+        key="_edst",
+    )
     w_pick = Window.partitionBy("_edst").orderBy(F.desc("_mass"), F.asc("label"))
-    # node-scale state broadcast per round — same rationale and knob as
-    # :func:`pagerank` (checkpointed-RDD stats are opaque, so the
-    # planner otherwise sort-merge-joins the edge table every round)
-    _bs = F.broadcast if broadcast_state else (lambda df: df)
-    for _ in range(iterations):
+
+    def step(labels: DataFrame) -> DataFrame:
         adopted = (
-            e.join(_bs(labels), e._esrc == labels.node)
+            e.join(F.broadcast(labels), e._esrc == labels.node)
             .groupBy("_edst", "label")
             .agg(F.sum("_w").alias("_mass"))
             .withColumn("_rn", F.row_number().over(w_pick))
             .filter(F.col("_rn") == 1)
             .select(F.col("_edst").alias("node"), F.col("label").alias("_new"))
         )
-        labels = (
-            labels.join(_bs(adopted), on="node", how="left")
-            .select("node", F.coalesce("_new", "label").alias("label"))
-            .localCheckpoint(eager=False)
+        return labels.join(F.broadcast(adopted), on="node", how="left").select(
+            "node", F.coalesce("_new", "label").alias("label")
         )
-    return labels
+
+    return loop.run(nodes.withColumn("label", F.col("node")), step, iterations)
 
 
 def cooccurrence_edges(
@@ -607,8 +547,6 @@ def core_numbers(
     rounds: int = 8,
     src: str = "s1",
     dst: str = "s2",
-    iter_partitions: int | None = None,
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """k-core decomposition of an undirected edge list (``src < dst``)
     by the h-index fixpoint iteration (Lü et al. 2016, "The H-index of
@@ -620,8 +558,10 @@ def core_numbers(
     coreness-peeling result without peeling's sequential dependency,
     so every round is ONE join (values onto neighbor lists) + ONE
     aggregate, the same synchronous-iteration shape as
-    :func:`pagerank` / label propagation, with the same deferred
-    ``localCheckpoint`` discipline between rounds.
+    :func:`pagerank` / label propagation, run on the same
+    :class:`rounds.Rounds` driver. The doubled edge list is its cached
+    stationary table, so the final round's checkpoint is eager (the call
+    runs every round before returning) and the cache is freed.
 
     ``rounds`` is FIXED (oracle-unrollable; the caller pins
     convergence — on small-world co-occurrence graphs a handful of
@@ -633,46 +573,37 @@ def core_numbers(
     ``(node, core)``."""
     from .text import _bind1
 
-    doubled = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionAll(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    loop = Rounds()
+    # keyed on the aggregate key u — hash-partitioned and cached
+    # (optimization round 16, guide §2.4): every round's h-index
+    # aggregate — a broadcast join then groupBy(u) — reuses this ONE
+    # up-front exchange instead of re-shuffling the doubled edge list
+    # once per round (rounds=24 on the co-supply graph: 24 edge-scale
+    # exchanges -> 1; the collect_list partials have NO map-side
+    # reduction, so each of those exchanges was genuinely edge-scale)
+    und = loop.stationary(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionAll(
+            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+        ),
+        key="u",
     )
-    # HASH-partition the stationary doubled edge list by the aggregate
-    # key u and keep it as a CACHE, not a checkpoint (optimization
-    # round 16, guide §2.4 — two operations keyed the same way share
-    # one exchange): InMemoryRelation preserves outputPartitioning
-    # where a localCheckpoint's LogicalRDD degrades to
-    # UnknownPartitioning (measured), so every round's
-    # h-index aggregate — a broadcast join then groupBy(u) — reuses
-    # this ONE up-front exchange instead of re-shuffling the doubled
-    # edge list once per round (rounds=24 on the co-supply graph: 24
-    # edge-scale exchanges -> 1; the collect_list partials have NO
-    # map-side reduction, so each of those exchanges was genuinely
-    # edge-scale). Deliberately NOT sized by ``iter_partitions`` —
-    # every round's map + h-index aggregate runs over these
-    # partitions, and caching at the node-state parallelism would
-    # serialize the rounds onto a handful of cores (the r15 pagerank
-    # lesson, re-measured here at sf0.1).
-    und = doubled.repartition(F.col("u")).cache()
-    core = und.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("val"))
     h_expr = _bind1(
         "array_sort(transform(_vs, x -> -x))",
         "sd",
         "cast(size(filter(transform(sequence(1, size(sd)),"
         " i -> -element_at(sd, i) >= i), b -> b)) as bigint)",
     )
-    # node-scale state broadcast per round — same rationale and knob as
-    # :func:`pagerank` (checkpointed-RDD stats are opaque, so the
-    # planner otherwise sort-merge-joins the doubled edge list every
-    # h-index round)
-    _bs = F.broadcast if broadcast_state else (lambda df: df)
-    for _ in range(int(rounds)):
+
+    def step(core: DataFrame) -> DataFrame:
         nb = und.join(
-            _bs(core.select(F.col("u").alias("v"), F.col("val"))), on="v"
+            F.broadcast(core.select(F.col("u").alias("v"), F.col("val"))), on="v"
         ).select("u", "val")
-        core = (
+        return (
             nb.groupBy("u")
             .agg(F.collect_list("val").alias("_vs"))
             .select("u", F.expr(h_expr).alias("val"))
-            .localCheckpoint(eager=False)
         )
+
+    degrees = und.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("val"))
+    core = loop.run(degrees, step, int(rounds))
     return core.select(F.col("u").alias("node"), F.col("val").alias("core"))

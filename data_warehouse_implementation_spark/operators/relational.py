@@ -270,9 +270,11 @@ def global_dense_rank(
     w_in = Window.partitionBy("_b").orderBy(*cols)
     # the ranked frame feeds both the offsets branch and the join —
     # the deferred checkpoint materializes it once inside the first
-    # consumer's job (plus: a checkpointed window output is what makes
-    # the counts aggregate below exchange-free — it reuses the window's
-    # hash partitioning on _b)
+    # consumer's job. The checkpoint does NOT keep the window's hash
+    # partitioning on _b (its LogicalRDD reports UnknownPartitioning),
+    # so the counts aggregate below plans its own Exchange
+    # hashpartitioning(_b) — cheap: the map-side partial max leaves one
+    # row per bucket per partition (plans/r17/dense_rank_counts_shape.txt)
     ranked = b.withColumn("_rn", F.dense_rank().over(w_in)).localCheckpoint(eager=False)
     counts = ranked.groupBy("_b").agg(F.max("_rn").alias("_n"))
     w_off = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, Window.currentRow)

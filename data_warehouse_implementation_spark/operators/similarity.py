@@ -27,9 +27,13 @@ Scale shapes:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+
+from .rounds import Rounds
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -274,6 +278,7 @@ def assign_cells(
     cen_id_col: str = "cen_id",
     cen_vec_col: str = "cen_vec",
     cell_col: str = "cell_id",
+    keys: Sequence[str] = (),
 ) -> DataFrame:
     """IVF coarse quantization: assign each vector to its nearest
     centroid by squared L2 distance (broadcast the centroid table —
@@ -281,7 +286,11 @@ def assign_cells(
     shuffle). dist^2 is expanded as dot(v,v) - 2*dot(v,c) + dot(c,c)
     with the same sequential folds on both engines, so the argmin (tie
     -> smallest centroid id) is oracle-reproducible. Returns
-    (id_col, cell_col).
+    (id_col, *keys, cell_col).
+
+    ``keys`` are group columns present on both sides (PQ's subspace
+    ``j``): a vector row competes only among the centroids of its own
+    group — the broadcast cross join becomes a broadcast equi-join.
 
     The argmin is a ``min_by`` aggregate, not a window: partial (map-
     side) aggregation collapses the k candidate rows per vector before
@@ -300,10 +309,12 @@ def assign_cells(
     # (and the min_by argmin) are bit-identical.
     v = vectors.select(
         id_col,
+        *keys,
         F.col(vec_col).alias("_v"),
         dot(F.col(vec_col), F.col(vec_col)).alias("_vv"),
     )
     c = centroids.select(
+        *keys,
         F.col(cen_id_col).alias("_cid"),
         F.col(cen_vec_col).alias("_cv"),
         dot(F.col(cen_vec_col), F.col(cen_vec_col)).alias("_cc"),
@@ -311,8 +322,10 @@ def assign_cells(
     dist2 = (
         F.col("_vv") - 2 * dot(F.col("_v"), F.col("_cv")) + F.col("_cc")
     )
-    scored = v.crossJoin(broadcast(c)).withColumn("_d2", dist2)
-    return scored.groupBy(id_col).agg(
+    scored = (
+        v.join(broadcast(c), on=list(keys)) if keys else v.crossJoin(broadcast(c))
+    ).withColumn("_d2", dist2)
+    return scored.groupBy(id_col, *keys).agg(
         F.min_by("_cid", F.struct(F.col("_d2"), F.col("_cid"))).alias(cell_col)
     )
 
@@ -363,6 +376,7 @@ def centroid_update(
     vec_cells: DataFrame,
     vec_col: str = "embedding",
     cell_col: str = "cell_id",
+    keys: Sequence[str] = (),
 ) -> DataFrame:
     """One Lloyd (k-means) refinement step: the new centroid of every
     cell is the elementwise mean of its member vectors. With
@@ -371,7 +385,8 @@ def centroid_update(
     (assign -> update -> assign ...), each step two shuffles keyed on
     (cell, position).
 
-    Emits long format (cell_id, pos, mean_val, n_members). The mean is
+    Emits long format (*keys, cell_id, pos, mean_val, n_members) —
+    ``keys`` group the cells (PQ's subspace ``j``). The mean is
     a FOLD over the cell's sorted member values (sort_array +
     sequential aggregate) rather than a float SUM aggregate, so the
     double arithmetic has one defined order and the DuckDB oracle
@@ -379,11 +394,12 @@ def centroid_update(
     sorted fold materializes one cell's values per (cell, pos) group —
     fine for quantizer-sized cells; swap the fold for a plain ``avg``
     at production scale where bit-replay is not required."""
-    pos = vec_cells.select(cell_col, F.posexplode(vec_col).alias("pos", "val"))
-    per = pos.groupBy(cell_col, "pos").agg(
+    pos = vec_cells.select(*keys, cell_col, F.posexplode(vec_col).alias("pos", "val"))
+    per = pos.groupBy(*keys, cell_col, "pos").agg(
         F.sort_array(F.collect_list(F.col("val").cast("double"))).alias("_vs")
     )
     return per.select(
+        *keys,
         cell_col,
         F.col("pos").cast("long").alias("pos"),
         (
@@ -404,10 +420,9 @@ def kmeans_fit(
     """Full Lloyd k-means in DataFrame algebra: seed with the first
     ``k`` vectors (deterministic), then alternate
     :func:`assign_cells` / :func:`centroid_update` for ``iters``
-    rounds. Each round is two keyed shuffles; like
-    ``dedup.connected_components`` the iterative lineage is truncated
-    with ``localCheckpoint`` so plans don't grow with the iteration
-    count. Returns ``(centroids, assignment)`` — centroids as
+    rounds on the :class:`rounds.Rounds` driver (two keyed shuffles
+    per round; the plan does not grow with the iteration count).
+    Returns ``(centroids, assignment)`` — centroids as
     (cen_id, cen_vec), assignment as (id, cell_id); the assignment is
     recomputed against the FINAL centroids after the last update, so
     the returned pair is mutually consistent (each vector's cell is its
@@ -418,7 +433,7 @@ def kmeans_fit(
     piece that turns the seed-centroid demo into a maintained index:
     re-fit periodically, re-assign, and the inverted file tracks the
     corpus distribution."""
-    centroids = (
+    seed = (
         vectors.orderBy(id_col)
         .limit(k)
         .select(
@@ -430,32 +445,52 @@ def kmeans_fit(
         )
         .localCheckpoint(eager=False)
     )
-    assigned = None
-    for _ in range(iters):
-        assigned = assign_cells(vectors, centroids, id_col=id_col, vec_col=vec_col)
-        members = vectors.select(id_col, vec_col).join(assigned, on=id_col)
-        new_cen = (
-            centroid_update(members, vec_col=vec_col)
-            .groupBy("cell_id")
+    centroids = _lloyd(vectors, seed, iters, id_col, vec_col, [])
+    # the returned assignment is computed against the FINAL centroids:
+    # an (assignment, centroids) pair from different iterations breaks
+    # the quantizer invariant downstream
+    assigned = assign_cells(vectors, centroids, id_col=id_col, vec_col=vec_col)
+    return centroids, assigned
+
+
+def _lloyd(
+    vectors: DataFrame,
+    seed: DataFrame,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    keys: list[str],
+) -> DataFrame:
+    """The Lloyd loop shared by :func:`kmeans_fit` and
+    :func:`pq_kmeans_fit`: ``iters`` rounds of :func:`assign_cells` /
+    :func:`centroid_update` per ``keys`` group on the
+    :class:`rounds.Rounds` driver, from the (*keys, cen_id, cen_vec)
+    ``seed``. Each round is two keyed shuffles; cells that lose all
+    members in a round drop out."""
+
+    def step(centroids: DataFrame) -> DataFrame:
+        assigned = assign_cells(
+            vectors, centroids, id_col=id_col, vec_col=vec_col, keys=keys
+        )
+        members = vectors.select(id_col, *keys, vec_col).join(
+            assigned, on=[id_col, *keys]
+        )
+        return (
+            centroid_update(members, vec_col=vec_col, keys=keys)
+            .groupBy(*keys, "cell_id")
             .agg(
                 F.array_sort(
                     F.collect_list(F.struct("pos", "mean_val"))
                 ).alias("_pm")
             )
             .select(
+                *keys,
                 F.col("cell_id").alias("cen_id"),
                 F.transform("_pm", lambda s: s["mean_val"]).alias("cen_vec"),
             )
         )
-        # plan truncation: the next round reads materialized centroids,
-        # not the whole history of prior rounds
-        centroids = new_cen.localCheckpoint(eager=False)
-    # one final assignment against the returned centroids: `assigned`
-    # above was computed from the PRE-update centroids, and an
-    # (assignment, centroids) pair from different iterations breaks the
-    # quantizer invariant downstream
-    assigned = assign_cells(vectors, centroids, id_col=id_col, vec_col=vec_col)
-    return centroids, assigned
+
+    return Rounds().run(seed, step, iters)
 
 
 def dense_topk_blocked(
@@ -583,71 +618,28 @@ def pq_kmeans_fit(
     """Per-subspace Lloyd k-means for PQ sub-centroids — the training
     step that turns the seed-subvector demo codebook into a real
     product quantizer (each subspace's codebook tracks ITS OWN
-    marginal distribution, which is the entire point of PQ): seed with
-    the first ``k`` vectors' subvectors (``cen_id = vec_id``, the
-    ``pq_encode`` seed layout), then ``iters`` rounds of per-(vector,
-    subspace) argmin assignment (broadcast codebook, map-side
-    ``min_by`` — :func:`assign_cells`'s shape with ``j`` as one more
-    equi-key) and per-(subspace, cell, position) ORDER-DEFINED mean
-    update (sorted fold / count — :func:`centroid_update`'s replayable
-    arithmetic), so a DuckDB oracle unrolls the whole loop bit-for-bit.
-    Returns (j, cen_id, cen_sub) — model-scale (m x k rows), broadcast
-    by every consumer. Cells that lose all members in a round drop out,
-    exactly as :func:`kmeans_fit`."""
+    marginal distribution, which is the entire point of PQ): the
+    :func:`kmeans_fit` Lloyd loop with the subspace ``j`` as its group
+    key, seeded with the first ``k`` vectors' subvectors
+    (``cen_id = vec_id``, the ``pq_encode`` seed layout). Assignment is
+    the per-(vector, subspace) broadcast ``min_by`` argmin and the
+    update the per-(subspace, cell, position) ORDER-DEFINED mean, so a
+    DuckDB oracle unrolls the whole loop bit-for-bit. Returns
+    (j, cen_id, cen_sub) — model-scale (m x k rows), broadcast by every
+    consumer. Cells that lose all members in a round drop out, exactly
+    as :func:`kmeans_fit`."""
+    # consumed twice per round (assign + update) across iters rounds
     sv = pq_subvectors(vectors, m, id_col=id_col, vec_col=vec_col).localCheckpoint(
         eager=False
-    )  # consumed once per round (assign + update) across iters rounds
-    cen = (
+    )
+    seed = (
         sv.filter(F.col(id_col) < k)
-        .select("j", F.col(id_col).alias("cen_id"), F.col("subvec").alias("cen_sub"))
+        .select("j", F.col(id_col).alias("cen_id"), F.col("subvec").alias("cen_vec"))
         .localCheckpoint(eager=False)
     )
-    for _ in range(iters):
-        # self-dots hoisted below the join — see :func:`assign_cells`
-        c = cen.select(
-            "j",
-            F.col("cen_id").alias("_cid"),
-            F.col("cen_sub").alias("_cs"),
-            dot(F.col("cen_sub"), F.col("cen_sub")).alias("_css"),
-        )
-        d2 = (
-            F.col("_svv") - 2 * dot(F.col("subvec"), F.col("_cs")) + F.col("_css")
-        )
-        assigned = (
-            sv.withColumn("_svv", dot(F.col("subvec"), F.col("subvec")))
-            .join(broadcast(c), on="j")
-            .withColumn("_d2", d2)
-            .groupBy(id_col, "j")
-            .agg(F.min_by("_cid", F.struct(F.col("_d2"), F.col("_cid"))).alias("_cell"))
-        )
-        members = sv.join(assigned, on=[id_col, "j"])
-        per = (
-            members.select("j", "_cell", F.posexplode("subvec").alias("pos", "val"))
-            .groupBy("j", "_cell", "pos")
-            .agg(
-                F.sort_array(F.collect_list(F.col("val").cast("double"))).alias("_vs")
-            )
-            .select(
-                "j",
-                "_cell",
-                "pos",
-                (
-                    F.aggregate("_vs", F.lit(0.0), lambda a, x: a + x)
-                    / F.size("_vs").cast("double")
-                ).alias("_mv"),
-            )
-        )
-        cen = (
-            per.groupBy("j", "_cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "_mv"))).alias("_pm"))
-            .select(
-                "j",
-                F.col("_cell").alias("cen_id"),
-                F.transform("_pm", lambda s: s["_mv"]).alias("cen_sub"),
-            )
-            .localCheckpoint(eager=False)  # plan truncation per round
-        )
-    return cen
+    return _lloyd(sv, seed, iters, id_col, "subvec", ["j"]).withColumnRenamed(
+        "cen_vec", "cen_sub"
+    )
 
 
 def pq_encode(

@@ -254,10 +254,16 @@ def suffix_dup_lengths(
     # suffixes (ties = genuinely equal suffixes, broken by position)
     from .relational import global_rank
 
-    # same explicit bucket as the rounds: final ranks are dense
-    # 1..n_total, so the adjacency rank skips its min/max pass too
+    # same explicit bucket as the rounds, so the adjacency rank skips
+    # its min/max pass too: final ranks are dense 1..n_total — unless
+    # no doubling round ran in hashed mode, where they are still the
+    # round-0 hash keys spread over [1, HASH_P63] (dense_bucket's
+    # width would put about one row in each bucket)
     order = global_rank(
-        ranks[-1], ["r", "d", "p"], "s", bucket=dense_bucket
+        ranks[-1],
+        ["r", "d", "p"],
+        "s",
+        bucket=hash_bucket if (hashed_tokens and rounds == 0) else dense_bucket,
     ).localCheckpoint(eager=False)
     succ = order.select(
         (F.col("s") - 1).alias("s"),

@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import Rounds
 from .text import words, words_sql
 
 
@@ -226,8 +227,8 @@ def unigram_train(
     """Train a unigram-LM vocabulary; returns (piece, n_chars, usage,
     prob) — the final vocabulary with each piece's last-round Viterbi
     usage and smoothed probability. Per-round state is vocab-sized and
-    ``localCheckpoint``-truncated like ``bpe_train``, so the plan stays
-    O(1) in the round count. ``em_rounds`` must be >= 1: the usage
+    the rounds run on the :class:`rounds.Rounds` driver, so the plan
+    stays O(1) in the round count. ``em_rounds`` must be >= 1: the usage
     column IS an EM product (the seed vocabulary has only substring
     frequencies), so a zero-round "training" has no result of the
     promised shape."""
@@ -253,7 +254,8 @@ def unigram_train_from_words(
     again). ``unigram_train`` delegates here after its own word pass."""
     if em_rounds < 1:
         raise ValueError(f"em_rounds must be >= 1, got {em_rounds}")
-    wordtab = wordtab.localCheckpoint(eager=False)
+    loop = Rounds()
+    wordtab = loop.stationary(wordtab)
     seeds = seed_pieces(wordtab, max_piece_len, seed_multi)
     stot = seeds.agg(F.sum("freq").alias("_tot"))
     vocab = (
@@ -266,10 +268,9 @@ def unigram_train_from_words(
         )
         .localCheckpoint(eager=False)
     )
-    for _ in range(em_rounds):
-        vocab = _em_round(wordtab, vocab, max_piece_len, keep_multi).localCheckpoint(
-            eager=False
-        )
+    vocab = loop.run(
+        vocab, lambda v: _em_round(wordtab, v, max_piece_len, keep_multi), em_rounds
+    )
     return vocab.select(
         "piece",
         F.length("piece").cast("long").alias("n_chars"),

@@ -77,15 +77,8 @@ def purchase_graph_pagerank(t: dict[str, DataFrame]) -> DataFrame:
     of magnitude above the drift, collapses both engines to identical
     values and — because the ORDER BY uses the rounded rank with a node
     tie-break — identical top-k membership."""
-    # iter_partitions=4: the purchase graph is node-scale (~2k nodes
-    # at sf0.1) — iterating at the session's fact-shuffle parallelism
-    # wastes a round's wall time on empty-task scheduling (see the
-    # operator's docstring; results bit-identical by construction)
     ranks = graph.pagerank(
-        _purchase_edges(t),
-        iterations=PR_ITERATIONS,
-        damping=PR_DAMPING,
-        iter_partitions=4,
+        _purchase_edges(t), iterations=PR_ITERATIONS, damping=PR_DAMPING
     )
     return (
         ranks.select("node", F.round("rank", 12).alias("rank"))
@@ -164,9 +157,7 @@ def purchase_graph_communities(t: dict[str, DataFrame]) -> DataFrame:
     propagation — community label and member count. Integer/string
     arithmetic only, so unlike pagerank there is no floating-point
     consideration at all: the oracle replays the rounds exactly."""
-    labels = graph.label_propagation(
-        _purchase_edges(t), iterations=LPA_ITERATIONS, iter_partitions=4
-    )
+    labels = graph.label_propagation(_purchase_edges(t), iterations=LPA_ITERATIONS)
     return (
         labels.groupBy(F.col("label").alias("community"))
         .agg(F.count(F.lit(1)).alias("n_members"))
@@ -327,10 +318,7 @@ def supplier_cosupply_kcore(t: dict[str, DataFrame]) -> DataFrame:
     unrolls exactly the same rounds, so the differential stays valid
     at ANY convergence state, and extra rounds past the fixpoint are
     idempotent by the h-operator's monotonicity."""
-    # iter_partitions=4: node-scale state, same knob as the other walks
-    cores = graph.core_numbers(
-        _strong_cosupply_edges(t), rounds=KCORE_ROUNDS, iter_partitions=4
-    )
+    cores = graph.core_numbers(_strong_cosupply_edges(t), rounds=KCORE_ROUNDS)
     return (
         cores.groupBy("core")
         .agg(

@@ -68,77 +68,26 @@ def oracle_sql() -> dict[str, str]:
 
 
 # The correctness driver differentials the FIRST 50 registry entries per
-# round. Round-16 window (the verbatim tools/staleness.py
-# --suggest-window order at rotation time; enforced by
-# tests/test_entry.py::test_driver_window_integrity and
-# ::test_driver_window_covers_stalest): the flagship, then the
-# 41-query round-11 max-staleness cohort (staleness 4 after the
-# r15 census landed), then the remaining queries stalest-first with
-# ties broken by name. 42 must-run rows for 50 slots — the whole
-# cohort retires this round, no capacity overflow; the 8 remaining
-# first-50 slots hold the head of the staleness-3 cohort. No new
-# queries this round (optimization round — no features).
+# round. Round-17 window (the verbatim tools/staleness.py
+# --suggest-window order at rotation time, except the 8 free first-50
+# slots; enforced by tests/test_entry.py::test_driver_window_integrity
+# and ::test_driver_window_covers_stalest): the flagship, then the
+# 41-query round-12 max-staleness cohort (staleness 4 after the r16
+# census landed), then 8 family heads whose operator path changed this
+# round (the round loops moved onto operators/rounds.py), then the
+# remaining queries stalest-first with ties broken by name. 42
+# must-run rows for 50 slots — the whole cohort retires this round, no
+# capacity overflow. No new queries this round.
 # Same-round deferrals that are NOT new queries — the ONLY names the
 # window-integrity test allows to interleave with deferred new
-# additions at position 51+. Round 16: none.
+# additions at position 51+. Round 17: none.
 _WINDOW_DEFERRAL_INTERLEAVE: list[str] = []
 
 _DRIVER_WINDOW = [
   # flagship — always re-verified
     "timely_rank_report",
-  # max-staleness cohort (last checked r11, staleness 4):
+  # max-staleness cohort (last checked r12, staleness 4):
   # all 41 fit — 42 must-run rows for 50 slots, no overflow
-    "doc_repetition_census",
-    "doc_shard_assignment",
-    "doc_substring_dedup",
-    "doc_substring_dup",
-    "embedding_ann_recall",
-    "events_asof_join",
-    "events_daily_delta",
-    "events_keep_latest",
-    "events_sessionize",
-    "hybrid_rrf_fusion",
-    "incremental_agg_refresh",
-    "integrity_report",
-    "jsonl_scan_agg",
-    "late_order_exists_sql",
-    "local_supplier_volume_sql",
-    "market_share_sql",
-    "media_patchify",
-    "multikey_category_join",
-    "nation_revenue_share",
-    "nation_top_customer_list",
-    "near_dup_minhash",
-    "near_dup_prefix_join",
-    "order_cube",
-    "orders_profile",
-    "price_histogram",
-    "pricing_summary_sql",
-    "priority_status_sets_sql",
-    "salted_flag_join",
-    "salted_skew_agg",
-    "shipping_priority_sql",
-    "simhash_near_dup",
-    "small_qty_revenue_sql",
-    "training_sequences",
-    "unigram_fertility_by_lang",
-    "unigram_token_stats",
-    "unigram_train",
-    "user_sketch_distinct",
-    "vocab_top_terms",
-    "waiting_supplier_sql",
-    "warehouse_dim_build",
-    "warehouse_fact_build",
-  # --- free slots to position 50, then 51+: remaining queries
-  # stalest-first (ties by name) — tools/staleness.py ---
-    "boilerplate_ngrams",
-    "brand_band_revenue_sql",
-    "brand_fuzzy_match",
-    "brand_price_outliers",
-    "corpus_curation_e2e",
-    "corpus_curation_funnel",
-    "corpus_mix_sources",
-    "customer_order_reconcile",
     "doc_bm25_capped",
     "doc_bm25_term_stats",
     "doc_decontaminate_fuzzy",
@@ -180,6 +129,17 @@ _DRIVER_WINDOW = [
     "user_retention_cohorts",
     "user_sketch_rollup",
     "window_funcs_sql",
+  # changed-path family heads (round loops on operators/rounds.py)
+    "purchase_graph_pagerank",
+    "purchase_graph_communities",
+    "supplier_cosupply_kcore",
+    "near_dup_clusters",
+    "embedding_semantic_dedup_trained",
+    "embedding_ann_pq_trained",
+    "embedding_ann_ivf_trained",
+    "unigram_train",
+  # --- 51+: remaining queries stalest-first (ties by name) —
+  # tools/staleness.py ---
     "avg_qty_gated_revenue_sql",
     "bloom_skipping_census",
     "bpe_encode_byte_fallback",
@@ -222,7 +182,6 @@ _DRIVER_WINDOW = [
     "exact_dedup_docs",
     "insert_if_absent_batch",
     "layout_advisor_report",
-    "supplier_cosupply_kcore",
     "supplier_cosupply_triangles",
     "training_sequences_text",
     "wordpiece_fertility_by_lang",
@@ -252,7 +211,6 @@ _DRIVER_WINDOW = [
     "media_resize_roundtrip",
     "min_cost_supplier_sql",
     "nation_value_concentration_sql",
-    "near_dup_clusters",
     "near_dup_containment",
     "near_dup_minhash_hashed",
     "near_dup_source_matrix",
@@ -299,17 +257,14 @@ _DRIVER_WINDOW = [
     "doc_stratified_sample",
     "doc_tfidf_top_terms",
     "embedding_ann_ivf",
-    "embedding_ann_ivf_trained",
     "embedding_ann_ivfpq",
     "embedding_ann_kmeans",
     "embedding_ann_multiprobe",
     "embedding_ann_pq",
-    "embedding_ann_pq_trained",
     "embedding_cosine_topk",
     "embedding_lsh_bucket_stats",
     "embedding_lsh_near_dup",
     "embedding_near_dup",
-    "embedding_semantic_dedup_trained",
     "embedding_semantic_dedup_trained_stats",
     "event_user_distinct",
     "event_value_band_join",
@@ -318,8 +273,6 @@ _DRIVER_WINDOW = [
     "near_dup_capped",
     "near_dup_incremental",
     "order_rollup",
-    "purchase_graph_communities",
-    "purchase_graph_pagerank",
     "quantizer_distortion_compare",
     "recent_order_preview",
     "segment_mode_fill",
@@ -327,6 +280,54 @@ _DRIVER_WINDOW = [
     "semantic_dedup_greedy",
     "semdedup_occupancy_compare",
     "window_frames_sql",
+    "boilerplate_ngrams",
+    "brand_band_revenue_sql",
+    "brand_fuzzy_match",
+    "brand_price_outliers",
+    "corpus_curation_e2e",
+    "corpus_curation_funnel",
+    "corpus_mix_sources",
+    "customer_order_reconcile",
+    "doc_repetition_census",
+    "doc_shard_assignment",
+    "doc_substring_dedup",
+    "doc_substring_dup",
+    "embedding_ann_recall",
+    "events_asof_join",
+    "events_daily_delta",
+    "events_keep_latest",
+    "events_sessionize",
+    "hybrid_rrf_fusion",
+    "incremental_agg_refresh",
+    "integrity_report",
+    "jsonl_scan_agg",
+    "late_order_exists_sql",
+    "local_supplier_volume_sql",
+    "market_share_sql",
+    "media_patchify",
+    "multikey_category_join",
+    "nation_revenue_share",
+    "nation_top_customer_list",
+    "near_dup_minhash",
+    "near_dup_prefix_join",
+    "order_cube",
+    "orders_profile",
+    "price_histogram",
+    "pricing_summary_sql",
+    "priority_status_sets_sql",
+    "salted_flag_join",
+    "salted_skew_agg",
+    "shipping_priority_sql",
+    "simhash_near_dup",
+    "small_qty_revenue_sql",
+    "training_sequences",
+    "unigram_fertility_by_lang",
+    "unigram_token_stats",
+    "user_sketch_distinct",
+    "vocab_top_terms",
+    "waiting_supplier_sql",
+    "warehouse_dim_build",
+    "warehouse_fact_build",
 ]
 # ---------------------------------------------------------------------------
 # Flagship (SURVEY §7 step 1): Q1a analog — star join, conditional agg,

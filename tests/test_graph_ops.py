@@ -237,37 +237,41 @@ def test_core_numbers_matches_peeling_reference(spark):
     assert again == got  # fixpoint: extra rounds are idempotent
 
 
-def test_broadcast_state_false_parity_all_walks(spark):
-    """The ``broadcast_state=False`` escape hatch (graphs whose node
-    table exceeds broadcast limits) must stay LIVE code and produce
-    bit-identical results for all three walks — join strategy never
-    changes values (VERDICT r15 #10 / ADVICE r15)."""
-    rows = [
-        ("a", "h", 3), ("b", "h", 1), ("h", "a", 2), ("h", "b", 1),
-        ("a", "b", 1), ("b", "a", 2),
-    ]
-    e = _edges(spark, rows)
-    pr_b = sorted((r.node, r["rank"]) for r in graph.pagerank(e, iterations=3).collect())
-    pr_s = sorted(
-        (r.node, r["rank"])
-        for r in graph.pagerank(e, iterations=3, broadcast_state=False).collect()
-    )
-    assert pr_b == pr_s
-    lp_b = sorted((r.node, r.label) for r in graph.label_propagation(e, iterations=3).collect())
-    lp_s = sorted(
-        (r.node, r.label)
-        for r in graph.label_propagation(e, iterations=3, broadcast_state=False).collect()
-    )
-    assert lp_b == lp_s
+def test_round_loops_free_their_edge_caches(spark, tmp_path):
+    """The walks whose rounds aggregate on the edge key cache the
+    hash-partitioned edge list (label propagation, k-core); the round
+    driver must unpersist it before returning, so repeated calls in one
+    session — a streaming refresh recomputing k-core per trigger —
+    leave no InMemoryRelation behind."""
+    from data_warehouse_implementation_spark import streaming
+    from data_warehouse_implementation_spark.sources.catalog import WarehouseCatalog
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.numCachedEntries()
+
+    rows = [("a", "h", 3), ("b", "h", 1), ("h", "a", 2), ("h", "b", 1), ("a", "b", 1)]
+    assert graph.label_propagation(_edges(spark, rows), iterations=2).collect()
     und = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5)], "s1 long, s2 long"
     )
-    kc_b = sorted((r.node, r.core) for r in graph.core_numbers(und, rounds=6).collect())
-    kc_s = sorted(
-        (r.node, r.core)
-        for r in graph.core_numbers(und, rounds=6, broadcast_state=False).collect()
+    cores = {r.node: r.core for r in graph.core_numbers(und, rounds=4).collect()}
+    assert cores == {1: 2, 2: 2, 3: 2, 4: 1, 5: 1}
+
+    cat = WarehouseCatalog(spark, str(tmp_path / "wh"))
+    cat.write(
+        "ec_edges",
+        spark.createDataFrame(
+            [(0, 1, 2, 1), (0, 1, 3, 1), (1, 2, 3, 1)],
+            "batch_id long, s1 long, s2 long, w long",
+        ),
     )
-    assert kc_b == kc_s
+    for _ in range(2):
+        got = {
+            r.node: r.core
+            for r in streaming.kcore_from_state(cat, "ec", strong=False).collect()
+        }
+        assert got == {1: 2, 2: 2, 3: 2}
+    assert cache_manager.numCachedEntries() == before
 
 
 def test_pagerank_null_weight_out_edges_not_dangling(spark):

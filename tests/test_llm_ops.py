@@ -1628,21 +1628,6 @@ def test_global_dense_rank_matches_window_dense_rank(spark):
     assert all(r.dr == order[r.w] for r in got_s)
 
 
-def test_connected_components_shuffle_state_parity(spark):
-    """The ``broadcast_state=False`` escape (node tables past broadcast
-    limits) must stay live and produce identical clusters."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
-        "doc_a long, doc_b long",
-    )
-    b = sorted((r.id, r.cluster_id) for r in dedup.connected_components(edges).collect())
-    s = sorted(
-        (r.id, r.cluster_id)
-        for r in dedup.connected_components(edges, broadcast_state=False).collect()
-    )
-    assert b == s
-
-
 def test_hyperplane_signature_null_vectors_yield_null(spark):
     """ADVICE r15: NULL embeddings (and NULL elements) must degrade to
     a NULL signature — the pre-Arrow column fold's NULL propagation —

@@ -207,6 +207,38 @@ def test_hashed_mode_parity(spark):
     assert rows_a == rows_b
 
 
+def test_hashed_mode_single_token_docs_bucket_bound(spark, monkeypatch):
+    """Single-token documents derive zero doubling rounds, so in hashed
+    mode the adjacency rank runs straight on the round-0 hash keys,
+    which spread over [1, HASH_P63]. Its bucket must be the hash-key
+    bucket (at most 65,536 values), not the dense-rank one, which gives
+    about one bucket per row; the result must still equal rank mode."""
+    from data_warehouse_implementation_spark.operators import relational
+
+    top_bucket = []
+    real = relational.global_rank
+
+    def spy(df, keys, out_col, bucket=None, **kw):
+        top_bucket.append(df.agg(F.max(bucket)).first()[0])
+        return real(df, keys, out_col, bucket=bucket, **kw)
+
+    monkeypatch.setattr(relational, "global_rank", spy)
+    words = [f"w{i % 40}" for i in range(120)] + [f"solo{i}" for i in range(30)]
+    df = spark.createDataFrame(list(enumerate(words)), "doc_id long, text string")
+    rank_mode = {
+        (r.doc_id, r.p): r.dup_len for r in suffix.suffix_dup_lengths(df).collect()
+    }
+    hashed = {
+        (r.doc_id, r.p): r.dup_len
+        for r in suffix.suffix_dup_lengths(df, hashed_tokens=True).collect()
+    }
+    assert hashed == rank_mode
+    assert sum(rank_mode.values()) == 120  # every w* token repeats
+    rank_top, hash_top = top_bucket
+    assert rank_top == 0
+    assert hash_top < 65536  # bucket ids start at 0
+
+
 def test_sa_dedup_equals_fixed_k_when_spans_exactly_k(spark):
     """VERDICT r13 #4 pin (a): when every duplicated span is exactly k
     tokens long, the SA removal at min_len=k coincides with the
